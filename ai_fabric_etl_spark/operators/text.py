@@ -45,10 +45,6 @@ def stopword_count_from(toks: Column, stopwords=ENGLISH_STOPWORDS) -> Column:
     return F.size(F.array_intersect(F.array_distinct(toks), sw))
 
 
-def stopword_count(col: Column, stopwords=ENGLISH_STOPWORDS) -> Column:
-    return stopword_count_from(tokens(col), stopwords)
-
-
 def quality_score_from(col: Column, toks: Column) -> Column:
     """Document quality score reusing the engine's canonical formula
     (silver_x12_parsing.py:1070): 100 - 20*issues - 5*warnings.
@@ -93,10 +89,6 @@ def predict_lang_from(toks: Column) -> Column:
             best = F.when(score >= best_score, F.lit(lang)).otherwise(best)
             best_score = F.when(score >= best_score, score).otherwise(best_score)
     return F.when(best_score > 0, best).otherwise(F.lit("und"))
-
-
-def predict_lang(col: Column) -> Column:
-    return predict_lang_from(tokens(col))
 
 
 def fingerprint_from(toks: Column) -> Column:

@@ -2287,18 +2287,7 @@ def q_er_resolve_entities(spark, sf_dir):
     (O(log n) rounds), then one aggregate electing the golden record
     (min-id survivorship via min_by). Singleton records keep their
     own id as entity_id through the left-join recovery."""
-    import os as _os
-
     from ai_fabric_etl_spark.operators import dedup as _dedup
-    from ai_fabric_etl_spark.streaming.admission_common import phase_timer
-
-    # VERDICT r13 item 3: under SPARK_GRAFT_GATE_TIMINGS the entry
-    # materializes (and persists) each phase at its boundary so the
-    # printout attributes the wall to names / pairs / components —
-    # the same diagnosis discipline the paired gate got in r13. The
-    # un-instrumented plan is untouched.
-    _timing = bool(_os.environ.get("SPARK_GRAFT_GATE_TIMINGS"))
-    mark = phase_timer("er")
 
     # persisted: the base-names aggregate feeds FOUR consumers (the
     # offset scalar, both typo-variant branches, and the recs union) —
@@ -2310,9 +2299,6 @@ def q_er_resolve_entities(spark, sf_dir):
         .groupBy(F.col("p_name").alias("text"))
         .agg(F.min("p_partkey").alias("doc_id"))
     ).persist()
-    if _timing:
-        names.count()
-        mark("names agg (scan+groupBy part)")
     # variant-id offset DERIVED from the data (max key + 1): fixed
     # literal offsets collide with base ids once keys outgrow them
     # (p_partkey passes 1e7 at TPC-H SF 50), silently merging
@@ -2342,17 +2328,9 @@ def q_er_resolve_entities(spark, sf_dir):
     pairs = _dedup.edit_distance_pairs(
         recs, id_col="doc_id", text_col="text", max_dist=1
     ).select(F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b"))
-    if _timing:
-        pairs = pairs.persist()
-        pairs.count()
-        mark("edit-distance pairs (SymSpell block + verify)")
     comp = _dedup.neardup_components(pairs, algorithm="star").select(
         F.col("doc_id").alias("_cid"), F.col("component")
     )
-    if _timing:
-        comp = comp.persist()
-        comp.count()
-        mark("components (star)")
     labeled = recs.join(comp, recs.doc_id == F.col("_cid"), "left").select(
         "doc_id",
         "text",

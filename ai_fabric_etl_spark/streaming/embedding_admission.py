@@ -38,31 +38,29 @@ from __future__ import annotations
 import hashlib
 import json
 import os
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.types import DoubleType, LongType
 
-from ai_fabric_etl_spark.operators.maintenance import maintenance_tick
-from ai_fabric_etl_spark.operators.merge import ParquetMergeTable
 from ai_fabric_etl_spark.operators.similarity import (
     emb_neardup_incremental,
     emb_neardup_index_insert,
 )
 from ai_fabric_etl_spark.streaming.admission_common import (
-    resolve_local_components,
+    Probed,
+    decision_schema,
+    one_slice,
+    read_ledger,
     round6,
-)
-from pyspark.sql.types import (
-    BooleanType,
-    DoubleType,
-    IntegerType,
-    LongType,
-    StructField,
-    StructType,
+    run_gate,
+    start_gate_stream,
+    within_batch_dups,
 )
 
-DECISION_COLS = ["vec_id", "admitted", "dup_of", "cosine", "epoch"]
+DECISIONS = decision_schema("vec_id", dup_of=LongType(), cosine=DoubleType())
 
 
 def _receipt_path(index_path: str, app_id: str | None, epoch_id: int) -> str:
@@ -91,122 +89,76 @@ def admit_embeddings_batch(
     max-cosine (then min-id) index id for corpus duplicates, the
     component canonical for within-batch duplicates, NULL for
     admitted rows."""
-    table = ParquetMergeTable(spark, state_dir)
-    last = table.last_epoch(app_id)
-    if last is not None and epoch_id <= last:
-        return False  # replayed epoch — already decided
 
-    batch = emb_batch.select(
-        F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding")
-    ).persist()
-    pairs = emb_neardup_incremental(
-        batch, index_path, threshold=threshold,
-        id_col="vec_id", vec_col="embedding", max_bucket=max_bucket,
-    )
+    def probe(scratch: list) -> Probed:
+        batch = emb_batch.select(
+            F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding")
+        ).persist()
+        scratch.append(batch)
+        pairs = emb_neardup_incremental(
+            batch, index_path, threshold=threshold,
+            id_col="vec_id", vec_col="embedding", max_bucket=max_bucket,
+        )
+        # LOCALIZE the decision-sized outputs: the verified pair list
+        # is O(batch near-dups) by construction and the batch rows are
+        # one micro-batch — membership classification, index rejects
+        # and the within-batch graph run in plain Python. The
+        # corpus-side machinery (map-side pruned probe + exact cosine
+        # verify inside emb_neardup_incremental) stays distributed.
+        batch_rows = [tuple(r) for r in batch.collect()]
+        pair_rows = [tuple(r) for r in pairs.collect()]
+        bids = {r[0] for r in batch_rows}
 
-    # LOCALIZE the decision-sized outputs (r14, same contract as the
-    # other gates): the verified pair list is O(batch near-dups) by
-    # construction and the batch rows themselves are one micro-batch —
-    # membership classification, index rejects, the within-batch
-    # graph, components, and the decision rows assemble in plain
-    # Python instead of ~8 per-batch shuffle micro-stages. The
-    # corpus-side machinery (map-side pruned probe + exact cosine
-    # verify inside emb_neardup_incremental) stays fully distributed.
-    batch_rows = [tuple(r) for r in batch.collect()]
-    pair_rows = [tuple(r) for r in pairs.collect()]
-    bids = {r[0] for r in batch_rows}
+        # classify pair sides by id membership in the CURRENT batch;
+        # corpus best = max struct (cosine, -other, other) — the
+        # grouped tie-break — rounded AFTER the argmax
+        best: dict = {}
+        within_max: dict = {}
+        for ia, ib, c in pair_rows:
+            if ia in bids and ib in bids:
+                # grouped, not raw: a prior crashed/converged attempt's
+                # insert delivers the same pair via BOTH the batch
+                # path and the index path — collapse duplicate edges
+                k = (ia, ib)
+                if k not in within_max or c > within_max[k]:
+                    within_max[k] = c
+                continue
+            vec, other = (ia, ib) if ia in bids else (ib, ia)
+            key = (c, -other, other)
+            if vec not in best or key > best[vec]:
+                best[vec] = key
+        index_dups = {
+            v: (other, round6(c)) for v, (c, _neg, other) in best.items()
+        }
 
-    # classify pair sides by id membership in the CURRENT batch;
-    # corpus best = max struct (cosine, -other, other) — the grouped
-    # tie-break — rounded AFTER the argmax
-    best: dict = {}
-    within_max: dict = {}
-    for ia, ib, c in pair_rows:
-        a_in, b_in = ia in bids, ib in bids
-        if a_in and b_in:
-            # grouped, not raw: a prior crashed/converged attempt's
-            # insert delivers the same pair via BOTH the batch path
-            # and the index path — collapse duplicate edges
-            k = (ia, ib)
-            if k not in within_max or c > within_max[k]:
-                within_max[k] = c
-            continue
-        vec, other = (ia, ib) if a_in else (ib, ia)
-        key = (c, -other, other)
-        if vec not in best or key > best[vec]:
-            best[vec] = key
-    index_dups = {
-        v: (other, round6(c)) for v, (c, _neg, other) in best.items()
-    }
-    surv = [
-        (a, b, round6(c))
-        for (a, b), c in within_max.items()
-        if a not in index_dups and b not in index_dups
-    ]
-    batch_dups = {
-        node: (canon, c)
-        for node, canon, c in resolve_local_components(surv, 1)
-    }
-
-    dec_rows = []
-    for vid, _vec in batch_rows:
-        if vid in index_dups:
-            dup, c = index_dups[vid]
-            dec_rows.append((vid, False, dup, c, int(epoch_id)))
-        elif vid in batch_dups:
-            canon, c = batch_dups[vid]
-            dec_rows.append((vid, False, canon, c, int(epoch_id)))
-        else:
-            dec_rows.append((vid, True, None, None, int(epoch_id)))
-    dec_schema = StructType([
-        StructField("vec_id", LongType(), True),
-        StructField("admitted", BooleanType(), False),
-        StructField("dup_of", LongType(), True),
-        StructField("cosine", DoubleType(), True),
-        StructField("epoch", IntegerType(), False),
-    ])
-
-    # inserts (guarded by the per-epoch receipt), then the commit.
-    # to_insert is a ONE-SLICE driver-local frame (vectors ride the
-    # already-collected batch rows) — never a plan reading an index
-    # path (recacheByPath, VERDICT r12 item 4) and no per-insert join.
-    receipt = _receipt_path(index_path, app_id, epoch_id)
-    if not os.path.exists(receipt):
-        admitted = {r[0] for r in dec_rows if r[1]}
-        ins_rows = [r for r in batch_rows if r[0] in admitted]
-        to_insert = (
-            spark.createDataFrame(
-                spark.sparkContext.parallelize(ins_rows, 1), batch.schema
+        def insert(admitted: list) -> None:
+            # guarded by the per-epoch receipt, written after the
+            # inserts and before the commit (module docstring)
+            receipt = _receipt_path(index_path, app_id, epoch_id)
+            if os.path.exists(receipt):
+                return
+            keep = set(admitted)
+            emb_neardup_index_insert(
+                one_slice(spark, [r for r in batch_rows if r[0] in keep],
+                          batch.schema),
+                index_path, id_col="vec_id", vec_col="embedding",
             )
-            if ins_rows
-            else spark.createDataFrame([], batch.schema)
-        )
-        emb_neardup_index_insert(
-            to_insert, index_path, id_col="vec_id", vec_col="embedding"
-        )
-        os.makedirs(os.path.dirname(receipt), exist_ok=True)
-        with open(receipt, "w", encoding="utf-8") as fh:
-            json.dump({"epoch": int(epoch_id),
-                       "n_admitted": sum(1 for r in dec_rows if r[1])},
-                      fh)
+            os.makedirs(os.path.dirname(receipt), exist_ok=True)
+            with open(receipt, "w", encoding="utf-8") as fh:
+                json.dump({"epoch": int(epoch_id),
+                           "n_admitted": len(admitted)}, fh)
 
-    # one-slice localized frame: the decision rows are already on the
-    # driver, and a default createDataFrame would scatter them over
-    # defaultParallelism partitions whose single-file rewrite costs
-    # ~10x the write itself (see merge.append's n_files note)
-    decided = spark.createDataFrame(
-        spark.sparkContext.parallelize(dec_rows, 1), dec_schema
-    )
-    # O(batch) ledger commit: the new version holds ONLY this batch's
-    # decision file; the version's full file set is its manifest
-    # (merge.append — r13 manifest layout: O(1) directory entries and
-    # O(batch) bytes on any filesystem). retain=2 bounds retained
-    # versions; maintenance_tick compacts the file count.
-    table.append(
-        decided, epoch=epoch_id, app_id=app_id, retain=2, n_files=None
-    )
-    batch.unpersist()
-    return True
+        return Probed(
+            ids=[r[0] for r in batch_rows],
+            index_dups=index_dups,
+            batch_dups=within_batch_dups(
+                [(a, b, round6(c)) for (a, b), c in within_max.items()],
+                index_dups,
+            ),
+            insert=insert,
+        )
+
+    return run_gate(spark, state_dir, epoch_id, app_id, DECISIONS, probe)
 
 
 def admit_embeddings_stream(
@@ -218,42 +170,19 @@ def admit_embeddings_stream(
     available_now: bool = True,
     maintenance_every: int | None = 50,
 ) -> StreamingQuery:
-    """Wire the embedding admission gate into a streaming query
-    (checkpoint = epoch-guard identity, exactly-once on restarts).
-    ``maintenance_every`` (default 50 — ON by default, VERDICT r13
-    item 2: a stream that never compacts grows per-leaf file counts
-    and manifest bytes without bound; pass ``None``/0 to explicitly
-    opt out): every N-th PROCESSED epoch, compact the index (keys/vecs deduped)
-    and the decision ledger between micro-batches
-    (maintenance.maintenance_tick — decisions are byte-identical
-    across a compaction). Replayed epochs skip the tick (the batch
-    fold reports replay, so a restart never pays O(index) compaction
-    for an epoch it did not process)."""
-    spark = stream.sparkSession
-
-    def fold(batch_df: DataFrame, epoch_id: int) -> None:
-        processed = admit_embeddings_batch(
-            spark,
-            batch_df,
-            index_path,
-            state_dir,
-            epoch_id,
-            app_id=checkpoint,
-            threshold=threshold,
-        )
-        if processed:
-            maintenance_tick(
-                spark, epoch_id, maintenance_every, [index_path], state_dir
-            )
-
-    writer = stream.writeStream.foreachBatch(fold).option(
-        "checkpointLocation", checkpoint
+    """Wire the embedding gate into a streaming query; checkpoint
+    identity and the maintenance tick (index keys/vecs deduped, and
+    the ledger): see :func:`admission_common.start_gate_stream`."""
+    admit = partial(
+        admit_embeddings_batch, index_path=index_path, state_dir=state_dir,
+        threshold=threshold,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_gate_stream(
+        stream, admit, checkpoint, state_dir, [index_path],
+        maintenance_every, available_now,
+    )
 
 
 def read_decisions(spark: SparkSession, state_dir: str) -> DataFrame:
     """All admission decisions so far (one row per vector seen)."""
-    return ParquetMergeTable(spark, state_dir).read().select(*DECISION_COLS)
+    return read_ledger(spark, state_dir, DECISIONS)

@@ -14,22 +14,14 @@ continuously instead of re-running corpus dedup per snapshot (r10
 shipped image+text; r11 completes audio — same machinery, the index
 trio is hash-agnostic — and video, whose gate is frame-aligned with
 the ±max_shift offset window so head-trimmed re-uploads reject too).
-The reference has no streaming media path; this follows the repo's
-foreachBatch state discipline (streaming/running_aggs.py): epoch ids
-ride in the decisions table's pointer scoped to the checkpoint
-identity, replayed epochs skip.
-
-Crash-window idempotency (the index insert and the decisions commit
-cannot be one atomic swap — they live in different stores): the
-insert runs FIRST, the epoch commit LAST. A crash after the insert
-replays the whole epoch (the guard has not advanced), and the probe
-step classifies an EXACT same-id index match as "this batch's rows
-from a prior partially-completed attempt" (a media id is unique in
-the stream, so batch_id == index_id can only be the batch's own
-earlier insert): those rows keep their admit decision and are NOT
-re-inserted. The reverse order would lose admitted rows from the
-index forever — a committed epoch skips on replay. Pytest-gated in
-both directions (convergence, and the ordering itself).
+The epoch replay guard, routing, insert-before-commit order and
+ledger commit are the shared gate skeleton
+(streaming/admission_common.run_gate); this module holds the image,
+audio and video probes and inserts. The probe classifies an EXACT
+same-id index match as "this batch's rows from a prior
+partially-completed attempt" (a media id is unique in the stream, so
+batch_id == index_id can only be the batch's own earlier insert):
+those rows keep their admit decision and are NOT re-inserted.
 
 Within-batch policy: one representative per near-dup component — the
 component canonical (smallest id) is admitted, every other member is
@@ -41,27 +33,30 @@ from the probe (raise by default — see multimodal.phash_index_probe).
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
-from pyspark.sql.types import (
-    BooleanType,
-    IntegerType,
-    LongType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import IntegerType, LongType
 
 from ai_fabric_etl_spark.operators import multimodal
-from ai_fabric_etl_spark.operators.maintenance import maintenance_tick
-from ai_fabric_etl_spark.operators.merge import ParquetMergeTable
 from ai_fabric_etl_spark.streaming.admission_common import (
+    Probed,
+    decision_schema,
     local_phash_within,
-    phase_timer,
-    resolve_local_components,
+    one_slice,
+    overlap,
+    read_ledger,
+    run_gate,
+    start_gate_stream,
+    within_batch_dups,
 )
 
-DECISION_COLS = ["media_id", "admitted", "dup_of", "hamming", "epoch"]
+_PROVENANCE = {"dup_of": LongType(), "hamming": IntegerType()}
+_VIDEO_PROVENANCE = {
+    "dup_of": LongType(), "matched_frames": LongType(), "shift": IntegerType(),
+}
 
 
 def _hash_batch(
@@ -94,6 +89,63 @@ def _hash_batch(
     )
 
 
+def _phash_outcome(probe_rows: list, presence: list, decoded: set):
+    """``(self_set, index_dups)`` from a pHash probe's collected
+    ``(batch_id, index_id, hamming)`` rows — shared with the paired
+    gate's image side.
+
+    batch_id == index_id can only be this batch's own row from a
+    prior attempt that crashed between index insert and the epoch
+    commit: keep its (admitted) decision, skip its re-insert — but
+    ONLY when the id's insert is COMPLETE (all 4 chunk rows durable):
+    the partitioned append is not atomic across (ci, cb) dirs, so a
+    crash mid-insert can leave 1-3 chunk rows, and skipping on any
+    single chunk match would permanently under-index the id. A
+    partial id re-inserts in full — the rows already present become
+    exact duplicates, which the probe de-duplicates (candidate
+    .distinct()) and compact_index removes. Completeness comes from
+    the probe's ``presence`` frame (phash_index_presence semantics
+    riding the probe's own pruned scan — pre-hot-filter, so exact in
+    every oversize mode), COLLECTED ONLY when a self candidate
+    appears: the steady-state batch pays no presence job at all.
+
+    Corpus duplicates exclude ALL matches whose index id is in the
+    current batch (not just same-id): such a row is the batch's own
+    insert from a prior crashed attempt, and classifying it as a
+    corpus dup would remove its edges from the within-batch graph and
+    make the decisions depend on the crash interleaving. Best match =
+    min (hamming, index_id), the probe's tie-break; ``index_dups``
+    maps ``batch_id -> (index_id, hamming)``."""
+    self_cand = {b for (b, ix, _h) in probe_rows if b == ix}
+    n_chunks = (
+        {r[0]: r[1] for r in presence[0].collect()} if self_cand else {}
+    )
+    self_set = {b for b in self_cand if n_chunks.get(b, 0) >= 4}
+    best: dict = {}
+    for b, ix, hm in probe_rows:
+        if ix in decoded:
+            continue
+        key = (hm, ix)
+        if b not in best or key < best[b]:
+            best[b] = key
+    return self_set, {b: (ix, hm) for b, (hm, ix) in best.items()}
+
+
+def _insert_hashes(
+    spark: SparkSession, index_path: str, ids: list, hash_rows: list,
+    id_col: str,
+) -> None:
+    """Insert ``ids``' 64-bit hashes into a pHash index as a ONE-SLICE
+    driver-local frame (never a plan reading the index path)."""
+    h_by = dict(hash_rows)
+    multimodal.phash_index_insert(
+        spark, index_path,
+        one_slice(spark, [(i, h_by[i]) for i in ids],
+                  f"{id_col} long, dhash long"),
+        id_col=id_col,
+    )
+
+
 def admit_media_batch(
     spark: SparkSession,
     media_batch: DataFrame,
@@ -123,176 +175,52 @@ def admit_media_batch(
     payload (no hash row) quarantines: ``admitted=false`` with NULL
     ``dup_of`` — the only rejected shape without provenance, so it is
     distinguishable from every dup rejection."""
-    table = ParquetMergeTable(spark, state_dir)
-    last = table.last_epoch(app_id)
-    if last is not None and epoch_id <= last:
-        return False  # replayed epoch after restart — already decided
-    mark = phase_timer(f"media:{modality}")
 
-    # one row per INPUT id; NULL dhash = undecodable (quarantine)
-    hashes = _hash_batch(
-        media_batch, modality, fake, id_col, payload_col
-    ).persist()
-    hashed = hashes.filter(F.col("dhash").isNotNull())
-    # scratch: the probe's internal persisted frame, unpersisted at
-    # batch end (ADVICE r11 — bounded block-store lifetime on the
-    # continuous path)
-    scratch: list = []
-    presence: list = []
-    probe = multimodal.phash_index_probe(
-        spark, index_path, hashed, max_hamming=max_hamming, id_col=id_col,
-        scratch=scratch, presence_out=presence,
-    )
-
-    # batch_id == index_id can only be this batch's own rows from a
-    # prior attempt that crashed between index insert and the epoch
-    # commit: keep their (admitted) decision, skip their re-insert.
-    # Skip ONLY when the id's insert is COMPLETE (all 4 chunk rows
-    # durable — ADVICE r11): the partitioned append is not atomic
-    # across (ci, cb) dirs, so a crash mid-insert can leave 1-3 chunk
-    # rows, and skipping on any single chunk match would permanently
-    # under-index the id. A partial id re-inserts in full — the rows
-    # already present become exact duplicates, which the probe
-    # de-duplicates (candidate .distinct()) and compact_index removes.
-    #
-    # Completeness comes from the probe's presence_out frame (r14:
-    # phash_index_presence semantics riding the probe's own pruned
-    # scan — pre-hot-filter, so it is exact in every oversize mode),
-    # and it is COLLECTED ONLY when a self candidate actually appears
-    # (a crash replay / re-admission): the steady-state batch pays the
-    # probe's cheap .distinct() candidate path (the r12-measured
-    # with_chunk_hits groupBy variant cost ~1.7x the probe wall on
-    # every batch to serve this rare case) and no presence job at all.
-    # LOCALIZE the probe outputs (r14): everything from here to the
-    # insert is micro-batch-sized by construction (one row per input
-    # id / per probe match) and the decision rows were always
-    # collected before the insert (recacheByPath). Collecting the
-    # hash and probe rows too and computing self-detection, index
-    # rejects, the within-batch pair graph, components, and the
-    # decision rows in plain Python removes the per-batch shuffle
-    # micro-stages the distributed frames cost (same localization
-    # contract + MAX_LOCAL_EDGES guards as the r12/r13 component
-    # localization; the index-side probe scan stays distributed).
-    hash_rows = [
-        (r[0], r[1]) for r in hashes.select(id_col, "dhash").collect()
-    ]
-    probe_rows = [tuple(r) for r in probe.collect()]
-    mark("hash + probe outputs localized")
-    decoded = {i for i, h in hash_rows if h is not None}
-    # full-presence self-detection (ADVICE r11): skip the re-insert
-    # only when all 4 chunk rows are durable (presence_out — exact,
-    # pre-hot-filter; collected only when a self candidate exists)
-    self_cand = {b for (b, ix, _h) in probe_rows if b == ix}
-    if self_cand:
-        n_chunks = {r[0]: r[1] for r in presence[0].collect()}
-        self_set = {b for b in self_cand if n_chunks.get(b, 0) >= 4}
-    else:
-        self_set = set()
-    # corpus duplicates exclude ALL matches whose index id is in the
-    # current batch (not just same-id): stream ids are unique, so an
-    # index row carrying ANY batch id is the batch's own insert from
-    # a prior crashed attempt. Classifying those as corpus dups would
-    # remove their edges from the within-batch graph below and make
-    # the DECISIONS depend on the crash interleaving; routed through
-    # the batch graph instead, replay computes exactly the clean
-    # run's decisions and index contents. Best match = min struct
-    # (hamming, index_id) — the probe's tie-break.
-    best: dict = {}
-    for b, ix, hm in probe_rows:
-        if ix in decoded:
-            continue
-        key = (hm, ix)
-        if b not in best or key < best[b]:
-            best[b] = key
-    index_dups = {b: (ix, hm) for b, (hm, ix) in best.items()}
-
-    # within-batch: one representative per near-dup component (see
-    # admission_common). Edges are restricted to probe SURVIVORS on
-    # both sides — an index duplicate keeps its index provenance and
-    # must not stitch two otherwise-unrelated survivors together.
-    batch_pairs = local_phash_within(
-        [(i, h) for i, h in hash_rows if h is not None],
-        max_hamming=max_hamming, what=f"admit_media_batch:{modality}",
-    )
-    surv_pairs = [
-        (a, b, hm) for a, b, hm in batch_pairs
-        if a not in index_dups and b not in index_dups
-    ]
-    batch_dups = {
-        node: (canon, hm)
-        for node, canon, hm in resolve_local_components(surv_pairs, 1)
-    }
-
-    # ORDERING INVARIANT: the index insert happens BEFORE the epoch
-    # commit. A crash after the insert replays the epoch (the guard
-    # has not advanced) and the same-id self-detection above skips the
-    # re-insert; a crash before the insert replays everything. The
-    # reverse order would be unrecoverable: a committed epoch whose
-    # insert never ran skips on replay and the admitted hashes are
-    # lost from the index forever.
-    #
-    # decisions cover EVERY input id (ADVICE r11): the hasher emits a
-    # NULL-hash row per undecodable payload (on_error='null'), so the
-    # localized hash rows cover admit / reject / quarantine without
-    # re-reading the batch source. Quarantine shape: admitted=false
-    # with NULL dup_of — the only rejected rows without provenance (a
-    # dup reject always names its dup_of).
-    dec_rows = []
-    for i, h in hash_rows:
-        if i in index_dups:
-            dup, hm = index_dups[i]
-            dec_rows.append((i, False, dup, hm, int(epoch_id)))
-        elif i in batch_dups:
-            canon, hm = batch_dups[i]
-            dec_rows.append((i, False, canon, hm, int(epoch_id)))
-        else:
-            dec_rows.append((i, h is not None, None, None, int(epoch_id)))
-    dec_schema = StructType([
-        StructField(id_col, LongType(), True),
-        StructField("admitted", BooleanType(), False),
-        StructField("dup_of", LongType(), True),
-        StructField("hamming", IntegerType(), True),
-        StructField("epoch", IntegerType(), False),
-    ])
-    mark("decisions computed (driver-local)")
-
-    h_by = dict(hash_rows)
-    ins_rows = [
-        (i, h_by[i])
-        for i, admitted, _d, _hm, _e in dec_rows
-        if admitted and i not in self_set
-    ]
-    to_insert = (
-        spark.createDataFrame(
-            spark.sparkContext.parallelize(ins_rows, 1),
-            f"{id_col} long, dhash long",
+    def probe(scratch: list) -> Probed:
+        # one row per INPUT id; NULL dhash = undecodable (quarantine),
+        # so the decisions cover every input id without re-reading
+        # the batch source
+        hashes = _hash_batch(
+            media_batch, modality, fake, id_col, payload_col
+        ).persist()
+        scratch.append(hashes)
+        presence: list = []
+        probe_df = multimodal.phash_index_probe(
+            spark, index_path, hashes.filter(F.col("dhash").isNotNull()),
+            max_hamming=max_hamming, id_col=id_col,
+            scratch=scratch, presence_out=presence,
         )
-        if ins_rows
-        else spark.createDataFrame([], f"{id_col} long, dhash long")
-    )
-    multimodal.phash_index_insert(spark, index_path, to_insert, id_col=id_col)
-    mark("index chunks inserted")
+        # LOCALIZE the probe outputs: everything from here to the
+        # insert is micro-batch-sized by construction (one row per
+        # input id / per probe match) and must be collected before the
+        # insert (recacheByPath); self-detection, index rejects, the
+        # within-batch pair graph and components then run in plain
+        # Python (the index-side probe scan stays distributed)
+        hash_rows = [
+            (r[0], r[1]) for r in hashes.select(id_col, "dhash").collect()
+        ]
+        probe_rows = [tuple(r) for r in probe_df.collect()]
+        decoded = {i for i, h in hash_rows if h is not None}
+        self_set, index_dups = _phash_outcome(probe_rows, presence, decoded)
+        pairs = local_phash_within(
+            [(i, h) for i, h in hash_rows if h is not None],
+            max_hamming=max_hamming, what=f"admit_media_batch:{modality}",
+        )
+        return Probed(
+            ids=[i for i, _h in hash_rows],
+            index_dups=index_dups,
+            batch_dups=within_batch_dups(pairs, index_dups),
+            insert=lambda admitted: _insert_hashes(
+                spark, index_path,
+                [i for i in admitted if i not in self_set], hash_rows, id_col,
+            ),
+            decoded=decoded,
+        )
 
-    # one-slice localized frame: the decision rows are already on the
-    # driver, and a default createDataFrame would scatter them over
-    # defaultParallelism partitions whose single-file rewrite costs
-    # ~10x the write itself (see merge.append's n_files note)
-    decided = spark.createDataFrame(
-        spark.sparkContext.parallelize(dec_rows, 1), dec_schema
+    return run_gate(
+        spark, state_dir, epoch_id, app_id,
+        decision_schema(id_col, **_PROVENANCE), probe,
     )
-    # O(batch) ledger commit: the new version holds ONLY this batch's
-    # decision file; the version's full file set is its manifest
-    # (merge.append — r13 manifest layout: O(1) directory entries and
-    # O(batch) bytes on any filesystem). retain=2 bounds retained
-    # versions; maintenance_tick compacts the file count.
-    table.append(
-        decided, epoch=epoch_id, app_id=app_id, retain=2, n_files=None
-    )
-    mark("decision ledger committed")
-    hashes.unpersist()
-    for fr in scratch:
-        fr.unpersist()
-    return True
 
 
 def admit_media_stream(
@@ -306,50 +234,23 @@ def admit_media_stream(
     modality: str = "image",
     maintenance_every: int | None = 50,
 ) -> StreamingQuery:
-    """Wire the admission gate into a streaming query. The checkpoint
-    location is the epoch-guard app identity (restart on the same
-    checkpoint resumes exactly-once; a fresh checkpoint resets).
-
-    ``maintenance_every`` (default 50 — ON by default, VERDICT r13
-    item 2: a stream that never compacts grows per-leaf file counts
-    and manifest bytes without bound; pass ``None``/0 to explicitly
-    opt out): every N-th PROCESSED epoch, compact the index
-    and the decision ledger between micro-batches
-    (maintenance.maintenance_tick — decisions are byte-identical
-    across a compaction). Replayed epochs skip the tick (the batch
-    fold reports replay, so a restart never pays O(index) compaction
-    for an epoch it did not process)."""
-    spark = stream.sparkSession
-
-    def fold(batch_df: DataFrame, epoch_id: int) -> None:
-        processed = admit_media_batch(
-            spark,
-            batch_df,
-            index_path,
-            state_dir,
-            epoch_id,
-            app_id=checkpoint,
-            max_hamming=max_hamming,
-            fake=fake,
-            modality=modality,
-        )
-        if processed:
-            maintenance_tick(
-                spark, epoch_id, maintenance_every, [index_path], state_dir
-            )
-
-    writer = stream.writeStream.foreachBatch(fold).option(
-        "checkpointLocation", checkpoint
+    """Wire the image (or audio) gate into a streaming query;
+    checkpoint identity and the maintenance tick (index and ledger):
+    see :func:`admission_common.start_gate_stream`."""
+    admit = partial(
+        admit_media_batch, index_path=index_path, state_dir=state_dir,
+        max_hamming=max_hamming, fake=fake, modality=modality,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_gate_stream(
+        stream, admit, checkpoint, state_dir, [index_path],
+        maintenance_every, available_now,
+    )
 
 
 def admit_audio_batch(*args, **kwargs) -> bool:
     """:func:`admit_media_batch` with the audio fingerprint hasher —
-    the continuous-admission face of audio near-dup (VERDICT r10 #1:
-    audio was batch-only; a training ingest re-ran corpus-vs-corpus
+    the continuous-admission face of audio near-dup (audio was
+    otherwise batch-only: a training ingest re-ran corpus-vs-corpus
     dedup per snapshot)."""
     kwargs["modality"] = "audio"
     return admit_media_batch(*args, **kwargs)
@@ -363,16 +264,14 @@ def admit_audio_stream(*args, **kwargs) -> StreamingQuery:
 
 def read_decisions(spark: SparkSession, state_dir: str) -> DataFrame:
     """All admission decisions so far (one row per media id seen)."""
-    return ParquetMergeTable(spark, state_dir).read().select(*DECISION_COLS)
+    return read_ledger(
+        spark, state_dir, decision_schema("media_id", **_PROVENANCE)
+    )
 
 
 # ---------------------------------------------------------------------------
 # video admission: frame-aligned, backed by the video frame-hash index
 # ---------------------------------------------------------------------------
-
-VIDEO_DECISION_COLS = [
-    "media_id", "admitted", "dup_of", "matched_frames", "shift", "epoch",
-]
 
 
 def admit_video_batch(
@@ -402,184 +301,107 @@ def admit_video_batch(
     ``(media_id, admitted, dup_of, matched_frames, shift, epoch)`` —
     matched_frames/shift are the winning alignment's evidence, NULL
     for admitted rows and for transitive within-batch members."""
-    table = ParquetMergeTable(spark, state_dir)
-    last = table.last_epoch(app_id)
-    if last is not None and epoch_id <= last:
-        return False  # replayed epoch after restart — already decided
-    mark = phase_timer("video")
 
-    # on_error='null': a corrupt/unsniffable clip emits no frame rows
-    # (ADVICE r12 — symmetric with the image/audio hashers' policy)
-    # and quarantines through the zero-frame decision path below
-    fh = multimodal.video_frame_hashes(
-        media_batch, every_n=every_n, fake=fake,
-        id_col=id_col, payload_col=payload_col, on_error="null",
-    ).persist()
-    scratch: list = []
-    presence: list = []
-    out: dict = {}
+    def probe(scratch: list) -> Probed:
+        # on_error='null': a corrupt/unsniffable clip emits no frame
+        # rows (symmetric with the image/audio hashers' policy) and
+        # quarantines through the zero-frame decision path
+        fh = multimodal.video_frame_hashes(
+            media_batch, every_n=every_n, fake=fake,
+            id_col=id_col, payload_col=payload_col, on_error="null",
+        ).persist()
+        scratch.append(fh)
+        presence: list = []
+        out: dict = {}
 
-    # LOCALIZE the decision-sized outputs (r14, same contract as the
-    # image/audio gate): the frame-hash rows, the probe's alignment
-    # matches and the within-batch pair list (video_near_pairs — the
-    # frame-alignment machinery itself STAYS distributed) are all
-    # micro-batch-sized; index rejects, components, and the decision
-    # rows then assemble in plain Python instead of ~8 per-batch
-    # shuffle micro-stages. The three read-only chains here are
-    # INDEPENDENT (batch ids need only the source; the probe and the
-    # within-batch alignment both read the persisted fh), so their
-    # jobs OVERLAP on driver threads (guide §2.6) instead of
-    # serializing: ids run while probe construction decodes fh, then
-    # the probe and alignment collects run side by side.
-    def _ids() -> None:
-        out["all_ids"] = {
-            r[0] for r in media_batch.select(id_col).distinct().collect()
-        }
+        # LOCALIZE the decision-sized outputs: the frame-hash rows,
+        # the probe's alignment matches and the within-batch pair
+        # list (video_near_pairs — the frame-alignment machinery
+        # itself STAYS distributed) are all micro-batch-sized. The
+        # read-only chains are INDEPENDENT (batch ids need only the
+        # source; the probe and the within-batch alignment both read
+        # the persisted fh), so their jobs OVERLAP: ids run while
+        # probe construction (its touched collect) decodes fh, then
+        # the probe and alignment collects run side by side.
+        def ids() -> None:
+            out["ids"] = {
+                r[0] for r in media_batch.select(id_col).distinct().collect()
+            }
 
-    def _probe_rows() -> None:
-        out["probe_rows"] = [tuple(r) for r in probe.collect()]
-
-    def _pair_rows() -> None:
-        out["pair_rows"] = [
-            tuple(r)
-            for r in multimodal.video_near_pairs(
-                fh, max_hamming=max_hamming, min_frames=min_frames,
-                max_shift=max_shift, id_col=id_col,
-            ).collect()
-        ]
-
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark import inheritable_thread_target
-
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        fut_ids = pool.submit(inheritable_thread_target(_ids))
-        # construction runs the touched collect — it decodes fh while
-        # the ids job scans the batch source on the other thread
-        probe = multimodal.video_index_probe(
-            spark, index_path, fh, max_hamming=max_hamming,
-            min_frames=min_frames, max_shift=max_shift, id_col=id_col,
-            scratch=scratch, presence_out=presence,
-        )
-        mark("probe built (decode + touched collect)")
-        futs = [
-            pool.submit(inheritable_thread_target(_probe_rows)),
-            pool.submit(inheritable_thread_target(_pair_rows)),
-        ]
-        for f in [fut_ids, *futs]:
-            f.result()  # re-raise probe failures (oversize guard etc.)
-    all_ids = out["all_ids"]
-    probe_rows = out["probe_rows"]
-    pair_rows = out["pair_rows"]
-    mark("ids + probe + within-batch alignment localized (overlapped)")
-    fh_rows = [
-        tuple(r) for r in fh.select(id_col, "frame_idx", "fhash").collect()
-    ]
-    mark("frame hashes localized (cached)")
-
-    decoded = {r[0] for r in fh_rows}
-    # self-detection requires the id's insert to be COMPLETE (every
-    # (frame_idx, chunk) row durable — ADVICE r11): a partial insert
-    # re-inserts in full, duplicates are probe-harmless. The presence
-    # values ride the probe's own pruned scan (presence_out) — no
-    # second chunk derivation or index read — and are collected only
-    # when a self candidate actually appears (crash replay).
-    self_cand = {b for (b, ix, _nm, _s) in probe_rows if b == ix}
-    if not self_cand:  # no crash replay: skip the presence check
-        self_set: set = set()
-    else:
-        mark("presence check starting (self candidates present)")
-        pres = {r[0]: (r[1], r[2]) for r in presence[0].collect()}
-        self_set = {
-            b for b in self_cand
-            if b in pres and pres[b][0] >= pres[b][1]
-        }
-    # exclude ALL matches against this batch's own ids (a prior
-    # crashed attempt's insert) — interleaving invariance; best match
-    # = max struct (n_matching_frames, -index_id, index_id, shift),
-    # the probe's tie-break
-    best: dict = {}
-    for b, ix, nm, sh in probe_rows:
-        if ix in decoded:
-            continue
-        key = (nm, -ix, ix, sh)
-        if b not in best or key > best[b]:
-            best[b] = key
-    index_dups = {b: (ix, nm, sh) for b, (nm, _neg, ix, sh) in best.items()}
-
-    surv_pairs = [
-        (a, b, nm, sh) for a, b, nm, sh in pair_rows
-        if a not in index_dups and b not in index_dups
-    ]
-    batch_dups = {
-        node: (canon, nm, sh)
-        for node, canon, nm, sh in resolve_local_components(surv_pairs, 2)
-    }
-
-    # decisions cover EVERY input clip (ADVICE r11): a payload that
-    # decodes to zero frames yields no frame-hash rows and would
-    # otherwise silently get no decision — it quarantines instead
-    # (admitted=false, NULL dup_of; see admit_media_batch)
-    dec_rows = []
-    for i in sorted(all_ids):
-        if i in index_dups:
-            dup, nm, sh = index_dups[i]
-            dec_rows.append((i, False, dup, nm, sh, int(epoch_id)))
-        elif i in batch_dups:
-            canon, nm, sh = batch_dups[i]
-            dec_rows.append((i, False, canon, nm, sh, int(epoch_id)))
-        else:
-            dec_rows.append(
-                (i, i in decoded, None, None, None, int(epoch_id))
+        def probe_and_pairs() -> None:
+            probe_df = multimodal.video_index_probe(
+                spark, index_path, fh, max_hamming=max_hamming,
+                min_frames=min_frames, max_shift=max_shift, id_col=id_col,
+                scratch=scratch, presence_out=presence,
             )
-    dec_schema = StructType([
-        StructField(id_col, LongType(), True),
-        StructField("admitted", BooleanType(), False),
-        StructField("dup_of", LongType(), True),
-        StructField("matched_frames", LongType(), True),
-        StructField("shift", IntegerType(), True),
-        StructField("epoch", IntegerType(), False),
-    ])
-    mark("decisions computed (driver-local)")
+            overlap(
+                lambda: out.update(
+                    probe=[tuple(r) for r in probe_df.collect()]
+                ),
+                lambda: out.update(pairs=[
+                    tuple(r) for r in multimodal.video_near_pairs(
+                        fh, max_hamming=max_hamming, min_frames=min_frames,
+                        max_shift=max_shift, id_col=id_col,
+                    ).collect()
+                ]),
+            )
 
-    rejected_ids = set(index_dups) | set(batch_dups)
-    ins_rows = [
-        (i, fi, h) for i, fi, h in fh_rows
-        if i not in rejected_ids and i not in self_set
-    ]
-    to_insert = (
-        spark.createDataFrame(
-            spark.sparkContext.parallelize(ins_rows, 1),
-            f"{id_col} long, frame_idx int, fhash long",
+        overlap(ids, probe_and_pairs)
+        fh_rows = [
+            tuple(r) for r in fh.select(id_col, "frame_idx", "fhash").collect()
+        ]
+        decoded = {r[0] for r in fh_rows}
+        # self-detection requires the id's insert to be COMPLETE
+        # (every (frame_idx, chunk) row durable): a partial insert
+        # re-inserts in full, duplicates are probe-harmless. The
+        # presence values ride the probe's own pruned scan and are
+        # collected only when a self candidate appears (crash replay).
+        self_cand = {b for (b, ix, _nm, _s) in out["probe"] if b == ix}
+        pres = (
+            {r[0]: (r[1], r[2]) for r in presence[0].collect()}
+            if self_cand else {}
         )
-        if ins_rows
-        else spark.createDataFrame(
-            [], f"{id_col} long, frame_idx int, fhash long"
-        )
-    )
-    multimodal.video_index_insert(spark, index_path, to_insert, id_col=id_col)
-    mark("frame chunks inserted (incl. presence check for self candidates)")
+        self_set = {
+            b for b in self_cand if b in pres and pres[b][0] >= pres[b][1]
+        }
+        # exclude ALL matches against this batch's own ids (a prior
+        # crashed attempt's insert) — interleaving invariance; best
+        # match = max struct (n_matching_frames, -index_id, index_id,
+        # shift), the probe's tie-break
+        best: dict = {}
+        for b, ix, nm, sh in out["probe"]:
+            if ix in decoded:
+                continue
+            key = (nm, -ix, ix, sh)
+            if b not in best or key > best[b]:
+                best[b] = key
+        index_dups = {
+            b: (ix, nm, sh) for b, (nm, _neg, ix, sh) in best.items()
+        }
 
-    # one-slice localized frame: the decision rows are already on the
-    # driver, and a default createDataFrame would scatter them over
-    # defaultParallelism partitions whose single-file rewrite costs
-    # ~10x the write itself (see merge.append's n_files note)
-    decided = spark.createDataFrame(
-        spark.sparkContext.parallelize(dec_rows, 1), dec_schema
+        def insert(admitted: list) -> None:
+            keep = set(admitted) - self_set
+            multimodal.video_index_insert(
+                spark, index_path,
+                one_slice(spark, [r for r in fh_rows if r[0] in keep],
+                          f"{id_col} long, frame_idx int, fhash long"),
+                id_col=id_col,
+            )
+
+        # decisions cover EVERY input clip: a payload that decodes to
+        # zero frames yields no frame-hash rows and quarantines
+        return Probed(
+            ids=sorted(out["ids"]),
+            index_dups=index_dups,
+            batch_dups=within_batch_dups(out["pairs"], index_dups),
+            insert=insert,
+            decoded=decoded,
+        )
+
+    return run_gate(
+        spark, state_dir, epoch_id, app_id,
+        decision_schema(id_col, **_VIDEO_PROVENANCE), probe,
     )
-    # O(batch) ledger commit: the new version holds ONLY this batch's
-    # decision file; the version's full file set is its manifest
-    # (merge.append — r13 manifest layout: O(1) directory entries and
-    # O(batch) bytes on any filesystem). retain=2 bounds retained
-    # versions; maintenance_tick compacts the file count.
-    table.append(
-        decided, epoch=epoch_id, app_id=app_id, retain=2, n_files=None
-    )
-    mark("decision ledger committed")
-    fh.unpersist()
-    for fr in scratch:
-        fr.unpersist()
-    return True
 
 
 def admit_video_stream(
@@ -594,39 +416,22 @@ def admit_video_stream(
     available_now: bool = True,
     maintenance_every: int | None = 50,
 ) -> StreamingQuery:
-    """Wire the video admission gate into a streaming query.
-    ``maintenance_every``: see :func:`admit_media_stream` (default-on,
-    processed epochs only)."""
-    spark = stream.sparkSession
-
-    def fold(batch_df: DataFrame, epoch_id: int) -> None:
-        processed = admit_video_batch(
-            spark,
-            batch_df,
-            index_path,
-            state_dir,
-            epoch_id,
-            app_id=checkpoint,
-            max_hamming=max_hamming,
-            min_frames=min_frames,
-            max_shift=max_shift,
-            fake=fake,
-        )
-        if processed:
-            maintenance_tick(
-                spark, epoch_id, maintenance_every, [index_path], state_dir
-            )
-
-    writer = stream.writeStream.foreachBatch(fold).option(
-        "checkpointLocation", checkpoint
+    """Wire the video gate into a streaming query; checkpoint identity
+    and the maintenance tick: see
+    :func:`admission_common.start_gate_stream`."""
+    admit = partial(
+        admit_video_batch, index_path=index_path, state_dir=state_dir,
+        max_hamming=max_hamming, min_frames=min_frames,
+        max_shift=max_shift, fake=fake,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_gate_stream(
+        stream, admit, checkpoint, state_dir, [index_path],
+        maintenance_every, available_now,
+    )
 
 
 def read_video_decisions(spark: SparkSession, state_dir: str) -> DataFrame:
     """All video admission decisions so far (one row per clip seen)."""
-    return ParquetMergeTable(spark, state_dir).read().select(
-        *VIDEO_DECISION_COLS
+    return read_ledger(
+        spark, state_dir, decision_schema("media_id", **_VIDEO_PROVENANCE)
     )

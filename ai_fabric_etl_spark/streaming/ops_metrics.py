@@ -23,23 +23,6 @@ def _dsum(c: Column) -> Column:
     return F.sum(c.cast("decimal(18,4)")).cast("double")
 
 
-def with_watermark(events: DataFrame, delay: str = "2 hours") -> DataFrame:
-    """Late-data bound for streaming state eviction. The reference has
-    no late-data story at all (it batch-recomputes a lookback window,
-    gold_x12_analytics.py:39,65-68); the watermark is what lets the
-    same aggregation run incrementally forever without unbounded state.
-
-    Event time must be TIMESTAMP (LTZ) for Spark's watermark; NTZ
-    parquet sources are normalized via the linear epoch-micros bridge
-    (session-zone independent; a plain cast is nonlinear across DST).
-    """
-    from ai_fabric_etl_spark.operators.timeutil import as_instant_col
-
-    return events.withColumn("ts", as_instant_col(events, "ts")).withWatermark(
-        "ts", delay
-    )
-
-
 def hourly_rollup(events: DataFrame) -> DataFrame:
     """KQL ``summarize count(), countif(fail) by bin(ts, 1h)``
     (sftp-monitoring-queries.md:21,89-94) as a tumbling window."""

@@ -30,40 +30,51 @@ interleaving-invariance rule both single-modality gates follow).
 
 from __future__ import annotations
 
-from concurrent.futures import ThreadPoolExecutor
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
-from pyspark.sql.types import (
-    BooleanType,
-    DoubleType,
-    IntegerType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import DoubleType, IntegerType, LongType, StringType
 
 from ai_fabric_etl_spark.operators import multimodal
-from ai_fabric_etl_spark.operators.dedup import sig_store_append
-from ai_fabric_etl_spark.operators.maintenance import maintenance_tick
-from ai_fabric_etl_spark.operators.merge import ParquetMergeTable
 from ai_fabric_etl_spark.streaming.admission_common import (
+    Probed,
+    decision_schema,
     local_phash_within,
-    local_text_within,
-    one_slice as _one_slice,
-    phase_timer,
-    resolve_local_components,
+    overlap,
+    read_ledger,
     round6,
+    run_gate,
+    start_gate_stream,
+    within_batch_dups,
 )
-from ai_fabric_etl_spark.streaming.text_admission import _text_probe
+from ai_fabric_etl_spark.streaming.media_admission import (
+    _insert_hashes,
+    _phash_outcome,
+)
+from ai_fabric_etl_spark.streaming.text_admission import (
+    _insert_text,
+    _text_probe,
+)
 
-DECISION_COLS = [
-    "pair_id", "admitted", "reject_modality",
-    "text_dup_of", "text_jaccard", "image_dup_of", "image_hamming",
-    "epoch",
-]
+_PROVENANCE = {
+    "reject_modality": StringType(),
+    "text_dup_of": LongType(), "text_jaccard": DoubleType(),
+    "image_dup_of": LongType(), "image_hamming": IntegerType(),
+}
+DECISIONS = decision_schema("pair_id", **_PROVENANCE)
+
+
+def _modality(text_side, image_side) -> str:
+    """Which side(s) of a rejected pair matched: 'both', 'text',
+    'image', or 'chain' (a transitive component member with no direct
+    edge to its canonical)."""
+    if text_side is not None and image_side is not None:
+        return "both"
+    if text_side is not None:
+        return "text"
+    return "image" if image_side is not None else "chain"
 
 
 def admit_pairs_batch(
@@ -96,309 +107,127 @@ def admit_pairs_batch(
     columns name the component canonical (an ADMITTED pair), with the
     per-modality metric NULL when that modality has no direct edge to
     the canonical."""
-    import os as _os
 
-    table = ParquetMergeTable(spark, state_dir)
-    last = table.last_epoch(app_id)
-    if last is not None and epoch_id <= last:
-        return False  # replayed epoch — already decided
-    mark = phase_timer("paired")
-    # under the timings flag, force each sub-frame at its boundary so
-    # the decisions phase attributes to its parts (diagnosis only —
-    # the untimed path materializes everything lazily at the collects)
-    _dbg = bool(_os.environ.get("SPARK_GRAFT_GATE_TIMINGS"))
+    def probe(scratch: list) -> Probed:
+        # the two modality probes are INDEPENDENT read-only chains
+        # (text: sign + band-prune + exact-Jaccard verify; image:
+        # decode + hash + statically-pruned chunk probe) with no write
+        # in either — their Spark jobs overlap on two driver threads.
+        # Each LOCALIZES its probe's decision-sized outputs; everything
+        # after the join is plain Python over micro-batch-sized rows
+        # (index rejects, the within-batch union graph, components,
+        # the decision rows) instead of ~12 micro-stages of per-batch
+        # shuffle scheduling. The corpus-side machinery stays
+        # distributed.
+        out: dict = {}
+        i_scratch: list = []
 
-    # --- the two modality probes are INDEPENDENT read-only chains
-    # (text: sign + band-prune + exact-Jaccard verify; image: decode +
-    # hash + statically-pruned chunk probe) with no write in either —
-    # run them on two driver threads so their Spark jobs overlap
-    # (guide §2.6: actions are only sequential because driver code
-    # calls them sequentially). Each thread LOCALIZES its probe's
-    # decision-sized outputs; everything after the join is plain
-    # Python over micro-batch-sized rows — computing index-rejects,
-    # the within-batch union graph, components, and the decision rows
-    # locally replaces ~12 micro-stages of per-batch shuffle
-    # scheduling (measured ~8s of the paired gate's wall at sf0.1)
-    # with sub-millisecond driver work over the same values. The
-    # corpus-side machinery stays fully distributed — only its
-    # DECISION-SIZED outputs localize, the same contract (and
-    # MAX_LOCAL_EDGES guards) as the r12/r13 component localization.
-    scratch: list = []
-    t_out: dict = {}
-    i_scratch: list = []
-    i_out: dict = {}
+        def text_side() -> None:
+            out["t"] = _text_probe(
+                spark, text_index_path,
+                pairs_batch.select(F.col(id_col).alias("doc_id"), text_col),
+                text_col, threshold, num_hashes, bands, n, max_bucket,
+                on_oversize="raise", stats_out=None, what="admit_pairs_batch",
+                scratch=scratch,
+            )
 
-    def _text_side() -> None:
-        sig, bk, t_self, t_index_dups, _t_within, occ = _text_probe(
-            spark, text_index_path,
-            pairs_batch.select(F.col(id_col).alias("doc_id"), text_col),
-            text_col, threshold, num_hashes, bands, n, max_bucket,
-            on_oversize="raise", stats_out=None, what="admit_pairs_batch",
-            scratch=scratch,
-        )
-        mark("text probe built (incl. sb-prune collect)")
-        t_out["t_dup_rows"] = [tuple(r) for r in t_index_dups.collect()]
-        t_out["t_self_set"] = {r[0] for r in t_self.collect()}
-        t_out["sig_rows"] = [
-            (r[0], r[1]) for r in sig.select("doc_id", "hs").collect()
-        ]
-        t_out["bk_rows"] = [
-            tuple(r) for r in bk.select("doc_id", "band", "bucket").collect()
-        ]
-        t_out["occ_rows"] = occ.collect()  # touched buckets — batch-sized
-        t_out["frames"] = (sig, bk, occ)
-        mark("text outputs localized (verify collect)")
-
-    def _image_side() -> None:
-        # one row per INPUT pair; NULL dhash = undecodable image
-        # payload (quarantine — a poison pair must not fail the batch)
-        hashes = multimodal.dhash64(
-            pairs_batch, fake=fake, id_col=id_col, payload_col=payload_col,
-            on_error="null",
-        ).withColumnRenamed(id_col, "doc_id").persist()
-        i_out["hash_rows"] = [
-            (r[0], r[1]) for r in hashes.select("doc_id", "dhash").collect()
-        ]
-        mark("image hashes (decode+dhash)")
-        hashed = hashes.filter(F.col("dhash").isNotNull())
-        presence: list = []
-        probe = multimodal.phash_index_probe(
-            spark, image_index_path, hashed, max_hamming=max_hamming,
-            id_col="doc_id", scratch=i_scratch, presence_out=presence,
-        )
-        i_out["probe_rows"] = [tuple(r) for r in probe.collect()]
-        # presence (the self-insert completeness check) rides the
-        # probe's pruned scan and is collected ONLY when a self
-        # candidate appears — the steady-state batch keeps the probe's
-        # cheap .distinct() path (the with_chunk_hits groupBy variant
-        # cost ~1.7x the probe wall on every batch — r12 measurement)
-        if any(b == ix for (b, ix, _h) in i_out["probe_rows"]):
-            i_out["n_chunks"] = {
-                r[0]: r[1] for r in presence[0].collect()
+        def image_side() -> None:
+            # one row per INPUT pair; NULL dhash = undecodable image
+            # payload (quarantine — a poison pair must not fail the batch)
+            hashes = multimodal.dhash64(
+                pairs_batch, fake=fake, id_col=id_col, payload_col=payload_col,
+                on_error="null",
+            ).withColumnRenamed(id_col, "doc_id").persist()
+            i_scratch.append(hashes)
+            out["hash_rows"] = [
+                tuple(r) for r in hashes.select("doc_id", "dhash").collect()
+            ]
+            presence: list = []
+            probe_df = multimodal.phash_index_probe(
+                spark, image_index_path,
+                hashes.filter(F.col("dhash").isNotNull()),
+                max_hamming=max_hamming, id_col="doc_id",
+                scratch=i_scratch, presence_out=presence,
+            )
+            out["decoded"] = {
+                i for i, h in out["hash_rows"] if h is not None
             }
-        else:
-            i_out["n_chunks"] = {}
-        i_out["frames"] = (hashes,)
-        mark("image probe localized")
+            out["img"] = _phash_outcome(
+                [tuple(r) for r in probe_df.collect()], presence,
+                out["decoded"],
+            )
 
-    from pyspark import inheritable_thread_target
+        overlap(text_side, image_side)
+        scratch.extend(i_scratch)
+        t, hash_rows, decoded = out["t"], out["hash_rows"], out["decoded"]
+        i_self_set, i_dups = out["img"]
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        futs = [
-            pool.submit(inheritable_thread_target(_text_side)),
-            pool.submit(inheritable_thread_target(_image_side)),
-        ]
-        for f in futs:
-            f.result()  # re-raise probe failures (oversize guard etc.)
-    sig, bk, occ = t_out["frames"]
-    (hashes,) = i_out["frames"]
-    scratch.extend(i_scratch)
-    t_dup_rows = t_out["t_dup_rows"]
-    t_self_set = t_out["t_self_set"]
-    sig_rows = t_out["sig_rows"]
-    bk_rows = t_out["bk_rows"]
-    occ_rows = t_out["occ_rows"]
-    hash_rows = i_out["hash_rows"]
-    probe_rows = i_out["probe_rows"]
-    mark("probe outputs localized (text+image probes + verify)")
+        # index rejections: EITHER modality matching rejects
+        idx: dict = {d: [dup, j, None, None]
+                     for d, (dup, j) in t.index_dups.items()}
+        for d, (ix, hm) in i_dups.items():
+            idx.setdefault(d, [None, None, None, None])[2:] = [ix, hm]
+        index_dups = {
+            d: (_modality(td, im), td, tj, im, ih)
+            for d, (td, tj, im, ih) in idx.items()
+        }
 
-    decoded = {i for i, h in hash_rows if h is not None}
-    # full-presence self-detection (ADVICE r11): skip the re-insert
-    # only when all 4 chunk rows are durable (presence_out — exact,
-    # pre-hot-filter; collected only when a self candidate exists)
-    n_chunks = i_out["n_chunks"]
-    i_self_set = {
-        b for (b, ix, _h) in probe_rows
-        if b == ix and n_chunks.get(b, 0) >= 4
-    }
-    # corpus duplicates exclude ALL matches whose index id is in the
-    # current batch (a prior crashed attempt's own insert — see
-    # _text_probe's interleaving-invariance note); best match =
-    # min (hamming, index_id), the probe's F.min(struct) tie-break
-    i_best: dict = {}
-    for b, ix, hm in probe_rows:
-        if ix in decoded:
-            continue
-        key = (hm, ix)
-        if b not in i_best or key < i_best[b]:
-            i_best[b] = key
-
-    # --- index rejections: EITHER modality matching rejects ---
-    idx_rej: dict = {}
-    for doc, dup, j in t_dup_rows:
-        idx_rej[doc] = [dup, j, None, None]
-    for doc, (hm, ix) in i_best.items():
-        e = idx_rej.setdefault(doc, [None, None, None, None])
-        e[2], e[3] = ix, hm
-
-    # --- within-batch: component policy over the UNION graph ---
-    # a QUARANTINED pair (undecodable image) must never enter the
-    # within-batch graph (ADVICE r12): its text side still produces
-    # edges, and as a component minimum it would become the canonical
-    # — edges restrict to DECODED pairs on both endpoints, and to
-    # probe survivors (an index duplicate keeps its index provenance
-    # and must not stitch two otherwise-unrelated survivors together).
-    hot_bb = {(r["band"], r["bucket"]) for r in occ_rows
-              if r["_n"] > max_bucket}
-    t_edges = local_text_within(sig_rows, bk_rows, hot_bb, threshold)
-    i_edges = local_phash_within(
-        [(i, h) for i, h in hash_rows if h is not None],
-        max_hamming=max_hamming, what="admit_pairs_batch",
-    )
-    em: dict = {}
-    for a, b, j in t_edges:
-        em.setdefault((a, b), [None, None])[0] = round6(j)
-    for a, b, hm in i_edges:
-        em.setdefault((a, b), [None, None])[1] = hm
-    surv = [
-        (a, b, tj, ih)
-        for (a, b), (tj, ih) in em.items()
-        if a in decoded and b in decoded
-        and a not in idx_rej and b not in idx_rej
-    ]
-    batch_rej: dict = {}
-    for node, canon, tj, ih in resolve_local_components(surv, 2):
-        modality = (
-            "both" if tj is not None and ih is not None
-            else "text" if tj is not None
-            else "image" if ih is not None
-            else "chain"
-        )
+        # within-batch: component policy over the UNION of the two
+        # modalities' pair graphs, restricted to DECODED pairs — a
+        # quarantined pair's text side still produces edges, and as a
+        # component minimum it would become the canonical
+        em: dict = {}
+        for a, b, j in t.edges:
+            em.setdefault((a, b), [None, None])[0] = round6(j)
+        for a, b, hm in local_phash_within(
+            [(i, h) for i, h in hash_rows if h is not None],
+            max_hamming=max_hamming, what="admit_pairs_batch",
+        ):
+            em.setdefault((a, b), [None, None])[1] = hm
         # both dup_of columns name the component canonical (an
         # ADMITTED pair); the per-modality metric stays NULL when that
         # modality has no direct edge to the canonical
-        batch_rej[node] = (canon, tj, canon, ih, modality)
-    if _dbg:
-        mark("within-batch graph + components (driver-local)")
+        batch_dups = {
+            d: (_modality(tj, ih), canon, tj, canon, ih)
+            for d, (canon, tj, ih) in within_batch_dups(
+                [(a, b, tj, ih) for (a, b), (tj, ih) in em.items()],
+                index_dups, decoded,
+            ).items()
+        }
 
-    # decisions cover EVERY input pair (ADVICE r11): the sig frame
-    # carries one row per pair; a pair with an undecodable image
-    # quarantines (admitted=false, reject_modality='decode', NULL
-    # dup_ofs) and neither of its sides is inserted into an index.
-    dec_rows = []
-    for doc, _hs in sig_rows:
-        if doc in idx_rej:
-            td, tj, im, ih = idx_rej[doc]
-            modality = (
-                "both" if td is not None and im is not None
-                else "text" if td is not None else "image"
+        def insert(admitted: list) -> None:
+            # the TEXT-index writes are order-sensitive between
+            # themselves (sigs before bands, see _insert_text), but the
+            # IMAGE-index insert touches a different store entirely —
+            # the two indexes' write jobs overlap; the ledger commit
+            # still waits for both
+            adm = set(admitted)
+            overlap(
+                lambda: _insert_text(spark, text_index_path, t, adm),
+                lambda: _insert_hashes(
+                    spark, image_index_path,
+                    sorted(i for i in adm if i not in i_self_set),
+                    hash_rows, "doc_id",
+                ),
             )
-            dec_rows.append((doc, False, modality, td, tj, im, ih,
-                             int(epoch_id)))
-        elif doc in batch_rej:
-            canon, tj, im_c, ih, modality = batch_rej[doc]
-            dec_rows.append((doc, False, modality, canon, tj, im_c, ih,
-                             int(epoch_id)))
-        elif doc not in decoded:
-            dec_rows.append((doc, False, "decode", None, None, None, None,
-                             int(epoch_id)))
-        else:
-            dec_rows.append((doc, True, None, None, None, None, None,
-                             int(epoch_id)))
-    dec_schema = StructType([
-        StructField(id_col, LongType(), True),
-        StructField("admitted", BooleanType(), False),
-        StructField("reject_modality", StringType(), True),
-        StructField("text_dup_of", LongType(), True),
-        StructField("text_jaccard", DoubleType(), True),
-        StructField("image_dup_of", LongType(), True),
-        StructField("image_hamming", IntegerType(), True),
-        StructField("epoch", IntegerType(), False),
-    ])
-    mark("decisions computed (driver-local)")
 
-    # --- inserts (text sigs -> text bands -> image), then commit ---
-    # EVERY append below writes a ONE-SLICE driver-local frame — never
-    # a plan reading an index path (recacheByPath — VERDICT r12 item
-    # 4) and never an extra shuffle stage: the insert rows are already
-    # on the driver.
-    admitted_ids = {r[0] for r in dec_rows if r[1]}
-    hs_by = dict(sig_rows)
-    t_ins_ids = sorted(i for i in admitted_ids if i not in t_self_set)
-
-    # the TEXT-index writes are order-sensitive between themselves
-    # (sigs before bands: a band row whose sig row is not yet durable
-    # would let a crash replay produce a candidate the exact-Jaccard
-    # verify silently drops), but the IMAGE-index insert touches a
-    # different store entirely — run it on a second driver thread so
-    # the two indexes' write jobs overlap (guide §2.6); the ledger
-    # commit still waits for both.
-    def _text_inserts() -> None:
-        sig_store_append(
-            _one_slice(
-                spark, [(i, hs_by[i]) for i in t_ins_ids],
-                "doc_id long, hs array<long>",
-            ),
-            text_index_path,
+        # decisions cover EVERY input pair: the sig rows carry one per
+        # pair; a pair with an undecodable image quarantines
+        # (admitted=false, reject_modality='decode', NULL dup_ofs) and
+        # neither of its sides is inserted into an index
+        return Probed(
+            ids=[d for d, _hs in t.sig_rows],
+            index_dups=index_dups,
+            batch_dups=batch_dups,
+            insert=insert,
+            decoded=decoded,
+            quarantine=("decode", None, None, None, None),
         )
-        mark("text sigs appended")
-        # live bucket_size: prior occupancy of the touched bucket (the
-        # probe's occ recount) + this batch's own insert delta —
-        # computed locally from the already-collected rows
-        occ_by = {(r["band"], r["bucket"]): r["_n"] for r in occ_rows}
-        t_ins_set = set(t_ins_ids)
-        new_bk = [(d, band, bucket) for d, band, bucket in bk_rows
-                  if d in t_ins_set]
-        delta: dict = {}
-        for _d, band, bucket in new_bk:
-            delta[(band, bucket)] = delta.get((band, bucket), 0) + 1
-        sized_rows = [
-            (d, bucket,
-             occ_by.get((band, bucket), 0) + delta[(band, bucket)], band)
-            for d, band, bucket in new_bk
-        ]
-        _one_slice(
-            spark, sized_rows,
-            "doc_id long, bucket long, bucket_size long, band int",
-        ).write.partitionBy("band").mode("append").parquet(
-            f"{text_index_path}/bands"
-        )
-        mark("text bands appended")
 
-    def _image_inserts() -> None:
-        h_by = dict(hash_rows)
-        i_ins_rows = [(i, h_by[i]) for i in sorted(admitted_ids)
-                      if i not in i_self_set]
-        multimodal.phash_index_insert(
-            spark, image_index_path,
-            _one_slice(spark, i_ins_rows, "doc_id long, dhash long"),
-            id_col="doc_id",
-        )
-        mark("image chunks inserted")
-
-    with ThreadPoolExecutor(max_workers=2) as ins_pool:
-        ins_futs = [
-            ins_pool.submit(inheritable_thread_target(_text_inserts)),
-            ins_pool.submit(inheritable_thread_target(_image_inserts)),
-        ]
-        for f in ins_futs:
-            f.result()  # re-raise write failures before the commit
-
-    # one-slice localized frame: the decision rows are already on the
-    # driver, and a default createDataFrame would scatter them over
-    # defaultParallelism partitions whose single-file rewrite costs
-    # ~10x the write itself (see merge.append's n_files note)
-    decided = spark.createDataFrame(
-        spark.sparkContext.parallelize(dec_rows, 1), dec_schema
+    return run_gate(
+        spark, state_dir, epoch_id, app_id,
+        decision_schema(id_col, **_PROVENANCE), probe,
     )
-    # O(batch) ledger commit: the new version holds ONLY this batch's
-    # decision file; the version's full file set is its manifest
-    # (merge.append — r13 manifest layout: O(1) directory entries and
-    # O(batch) bytes on any filesystem). retain=2 bounds retained
-    # versions; maintenance_tick compacts the file count.
-    table.append(
-        decided, epoch=epoch_id, app_id=app_id, retain=2, n_files=None
-    )
-    mark("decision ledger committed")
-    sig.unpersist()
-    bk.unpersist()
-    hashes.unpersist()
-    occ.unpersist()
-    for fr in scratch:
-        fr.unpersist()
-    return True
-
-
 
 
 def admit_pairs_stream(
@@ -413,46 +242,21 @@ def admit_pairs_stream(
     available_now: bool = True,
     maintenance_every: int | None = 50,
 ) -> StreamingQuery:
-    """Wire the paired gate into a streaming query (checkpoint =
-    epoch-guard identity, exactly-once across restarts).
-    ``maintenance_every`` (default 50 — ON by default, VERDICT r13
-    item 2: a stream that never compacts grows per-leaf file counts
-    and manifest bytes without bound; pass ``None``/0 to explicitly
-    opt out): every N-th PROCESSED epoch, compact the indexes (BOTH indexes)
-    and the decision ledger between micro-batches
-    (maintenance.maintenance_tick — decisions are byte-identical
-    across a compaction). Replayed epochs skip the tick (the batch
-    fold reports replay, so a restart never pays O(index) compaction
-    for an epoch it did not process)."""
-    spark = stream.sparkSession
-
-    def fold(batch_df: DataFrame, epoch_id: int) -> None:
-        processed = admit_pairs_batch(
-            spark,
-            batch_df,
-            text_index_path,
-            image_index_path,
-            state_dir,
-            epoch_id,
-            app_id=checkpoint,
-            threshold=threshold,
-            max_hamming=max_hamming,
-            fake=fake,
-        )
-        if processed:
-            maintenance_tick(
-                spark, epoch_id, maintenance_every,
-                [text_index_path, image_index_path], state_dir,
-            )
-
-    writer = stream.writeStream.foreachBatch(fold).option(
-        "checkpointLocation", checkpoint
+    """Wire the paired gate into a streaming query; checkpoint
+    identity and the maintenance tick (BOTH indexes and the ledger):
+    see :func:`admission_common.start_gate_stream`."""
+    admit = partial(
+        admit_pairs_batch, text_index_path=text_index_path,
+        image_index_path=image_index_path, state_dir=state_dir,
+        threshold=threshold, max_hamming=max_hamming, fake=fake,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_gate_stream(
+        stream, admit, checkpoint, state_dir,
+        [text_index_path, image_index_path], maintenance_every,
+        available_now,
+    )
 
 
 def read_decisions(spark: SparkSession, state_dir: str) -> DataFrame:
     """All paired admission decisions so far (one row per pair)."""
-    return ParquetMergeTable(spark, state_dir).read().select(*DECISION_COLS)
+    return read_ledger(spark, state_dir, DECISIONS)

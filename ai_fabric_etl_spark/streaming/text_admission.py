@@ -23,24 +23,27 @@ stamp ``bucket_size`` with the bucket's occupancy AS OF their insert
 them; its guard is still build-time-approximate on grown indexes —
 this module's live count is the admission-path guarantee.
 
-Epoch discipline and crash-window convergence follow
-media_admission: epoch ids ride the decisions table pointer
-(replay-skip); a probe match with ``index id == batch id`` can only
-be the batch's own insert from a prior crashed attempt (ids are
-unique in the stream), so those rows keep their admit decision and
-are not re-inserted — any interleaving converges. Write order is
-sigs -> bands -> decisions commit: self-detection keys on band rows,
-so a crash between the appends leaves orphan sigs (benign duplicate
-on re-insert), never band keys whose signatures are permanently
-suppressed; the commit runs last so a skipped replay never implies
-an insert that did not happen.
+Epoch discipline, routing and the ledger commit are the shared gate
+skeleton (streaming/admission_common.run_gate); a probe match with
+``index id == batch id`` can only be the batch's own insert from a
+prior crashed attempt (ids are unique in the stream), so those rows
+keep their admit decision and are not re-inserted — any interleaving
+converges. Write order is sigs -> bands -> decisions commit:
+self-detection keys on band rows, so a crash between the appends
+leaves orphan sigs (benign duplicate on re-insert), never band keys
+whose signatures are permanently suppressed. The paired gate reuses
+this module's probe and index insert for its text side.
 """
 
 from __future__ import annotations
 
+from functools import partial
+from typing import NamedTuple
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.types import DoubleType, LongType
 
 from ai_fabric_etl_spark.operators.dedup import (
     _check_pmod_id_type,
@@ -52,25 +55,31 @@ from ai_fabric_etl_spark.operators.dedup import (
     sig_store_layout,
     sig_store_read,
 )
-from ai_fabric_etl_spark.operators.maintenance import maintenance_tick
-from ai_fabric_etl_spark.operators.merge import ParquetMergeTable
 from ai_fabric_etl_spark.operators.multimodal import _oversize_guard
 from ai_fabric_etl_spark.streaming.admission_common import (
+    Probed,
+    decision_schema,
     local_text_within,
-    one_slice as _one_slice,
-    resolve_local_components,
+    one_slice,
+    read_ledger,
     round6,
-)
-from pyspark.sql.types import (
-    BooleanType,
-    DoubleType,
-    IntegerType,
-    LongType,
-    StructField,
-    StructType,
+    run_gate,
+    start_gate_stream,
+    within_batch_dups,
 )
 
-DECISION_COLS = ["doc_id", "admitted", "dup_of", "jaccard", "epoch"]
+DECISIONS = decision_schema("doc_id", dup_of=LongType(), jaccard=DoubleType())
+
+
+class TextProbe(NamedTuple):
+    """The localized outcome of :func:`_text_probe`."""
+
+    index_dups: dict  # doc_id -> (dup_of, jaccard) of a corpus duplicate
+    self_set: set  # ids whose band rows are already durable
+    sig_rows: list  # (doc_id, hs), one per input doc
+    bk_rows: list  # (doc_id, band, bucket)
+    occ_rows: list  # live occupancy rows of the touched buckets
+    edges: list  # within-batch (doc_a, doc_b, jaccard), doc_a < doc_b
 
 
 def _sig_bands(
@@ -113,18 +122,17 @@ def _text_probe(
     on_oversize: str,
     stats_out: dict | None,
     what: str,
-    scratch: list | None = None,
-):
+    scratch: list,
+) -> TextProbe:
     """The probe half of text admission, shared with the cross-modal
     paired gate: shingle+sign the batch, prune the band index to the
     touched buckets (live occupancy skew policy), verify candidates
-    with exact Jaccard, and compute the within-batch pair list.
-    Returns ``(sig, bk, self_ids, index_dups, within, occ)`` — sig,
-    bk, and occ come back PERSISTED (the caller unpersists after its
-    inserts); the batch-sized candidate frame is persisted into
-    ``scratch`` when given (continuous callers unpersist at batch
-    end) so the sb-prune collect, self-detection, and the verify
-    share one candidate materialization."""
+    with exact Jaccard, then LOCALIZE the decision-sized outputs and
+    find the within-batch pairs on the driver. Every frame it
+    persists goes into ``scratch`` (the caller unpersists after its
+    commit); the batch-sized candidate frame is one of them, so the
+    sb-prune collect, self-detection, and the verify share one
+    candidate materialization."""
     sig, bk = _sig_bands(docs_batch, text_col, num_hashes, bands, n)
     bk = bk.persist()
     touched = bk.select("band", "bucket").distinct()
@@ -175,8 +183,7 @@ def _text_probe(
         .select(F.col("doc_id").alias("doc_a"), "doc_b")
         .distinct()
     ).persist()
-    if scratch is not None:
-        scratch.append(cand_cross)
+    scratch += [sig, bk, occ, cand_cross]
     self_ids = cand_cross.filter(F.col("doc_a") == F.col("doc_b")).select(
         F.col("doc_b").alias("doc_id")
     ).distinct()
@@ -219,7 +226,7 @@ def _text_probe(
         sig.select(F.col("doc_id").alias("doc_b"), F.col("hs").alias("hs_b")),
         threshold,
     )
-    index_dups = (
+    corpus_dups = (
         cross.groupBy("doc_b")
         .agg(F.max(F.struct(F.col("jaccard").alias("j"),
                             (-F.col("doc_a")).alias("negid"),
@@ -229,22 +236,75 @@ def _text_probe(
                 F.round(F.col("_b.j"), 6).alias("jaccard"))
     )
 
-    # within-batch candidates from the batch's own band keys
-    a = bk_ok.select("band", "bucket", F.col("doc_id").alias("doc_a"))
-    b = bk_ok.select("band", "bucket", F.col("doc_id").alias("doc_b"))
-    cand_batch = (
-        a.join(b, ["band", "bucket"])
-        .where(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
+    # LOCALIZE the decision-sized outputs: index rejects, the
+    # within-batch candidate+Jaccard graph, components, the decision
+    # rows and the insert frames all assemble in plain Python over
+    # micro-batch-sized rows instead of ~10 per-batch shuffle
+    # micro-stages. They are collected before any append because
+    # their plans read the index's bands/sigs parquet, and
+    # recacheByPath would re-probe the grown index at the commit. The
+    # corpus-side machinery (band-pruned index scan, sb-pruned
+    # exact-Jaccard verify) stays fully distributed.
+    index_dups = {d: (dup, j) for d, dup, j in corpus_dups.collect()}
+    self_set = {r[0] for r in self_ids.collect()}
+    sig_rows = [(r[0], r[1]) for r in sig.select("doc_id", "hs").collect()]
+    bk_rows = [
+        tuple(r) for r in bk.select("doc_id", "band", "bucket").collect()
+    ]
+    occ_rows = occ.collect()  # touched buckets — batch-sized
+    hot_bb = {(r["band"], r["bucket"]) for r in occ_rows
+              if r["_n"] > max_bucket}
+    return TextProbe(
+        index_dups, self_set, sig_rows, bk_rows, occ_rows,
+        local_text_within(sig_rows, bk_rows, hot_bb, threshold),
     )
-    within = _exact_jaccard(
-        cand_batch,
-        sig.select(F.col("doc_id").alias("doc_a"), F.col("hs").alias("hs_a")),
-        sig.select(F.col("doc_id").alias("doc_b"), F.col("hs").alias("hs_b")),
-        threshold,
+
+
+def _insert_text(
+    spark: SparkSession, index_path: str, t: TextProbe, admitted
+) -> None:
+    """Append the admitted docs that are not already durable to the
+    text index: sigs, then bands. Every append writes a ONE-SLICE
+    driver-local frame — never a plan reading an index path, and no
+    per-insert joins.
+
+    ORDERING INVARIANT (crash-window convergence): self-detection
+    keys on BAND rows (the probe path), so bands must never exist
+    without their signatures. Sigs first means a crash between the
+    two appends leaves sig rows whose bands are missing — the replay's
+    self-detection finds nothing and re-inserts BOTH (a duplicate sig
+    row is benign: candidate pairs are grouped/maxed downstream, and
+    the exact-Jaccard value is identical), never band keys whose
+    signatures are permanently suppressed."""
+    ins_ids = sorted(d for d in admitted if d not in t.self_set)
+    hs_by = dict(t.sig_rows)
+    sig_store_append(
+        one_slice(
+            spark, [(d, hs_by[d]) for d in ins_ids],
+            "doc_id long, hs array<long>",
+        ),
+        index_path,
     )
-    return sig, bk, self_ids, index_dups, within, occ
+    # live bucket_size: the touched bucket's prior occupancy (the
+    # probe's recount) + this batch's own insert delta
+    occ_by = {(r["band"], r["bucket"]): r["_n"] for r in t.occ_rows}
+    ins_set = set(ins_ids)
+    new_bk = [(d, band, bucket) for d, band, bucket in t.bk_rows
+              if d in ins_set]
+    delta: dict = {}
+    for _d, band, bucket in new_bk:
+        delta[(band, bucket)] = delta.get((band, bucket), 0) + 1
+    sized_rows = [
+        (d, bucket, occ_by.get((band, bucket), 0) + delta[(band, bucket)],
+         band)
+        for d, band, bucket in new_bk
+    ]
+    one_slice(
+        spark, sized_rows,
+        "doc_id long, bucket long, bucket_size long, band int",
+    ).write.partitionBy("band").mode("append").parquet(
+        f"{index_path}/bands"
+    )
 
 
 def admit_text_batch(
@@ -278,140 +338,25 @@ def admit_text_batch(
         raise ValueError(
             f"on_oversize must be 'raise' or 'drop', got {on_oversize!r}"
         )
-    table = ParquetMergeTable(spark, state_dir)
-    last = table.last_epoch(app_id)
-    if last is not None and epoch_id <= last:
-        return False  # replayed epoch — already decided
 
-    scratch: list = []
-    sig, bk, self_ids, index_dups, _within, occ = _text_probe(
-        spark, index_path, docs_batch, text_col, threshold,
-        num_hashes, bands, n, max_bucket, on_oversize, stats_out,
-        what="admit_text_batch", scratch=scratch,
-    )
+    def probe(scratch: list) -> Probed:
+        t = _text_probe(
+            spark, index_path, docs_batch, text_col, threshold,
+            num_hashes, bands, n, max_bucket, on_oversize, stats_out,
+            what="admit_text_batch", scratch=scratch,
+        )
+        return Probed(
+            ids=[d for d, _hs in t.sig_rows],
+            index_dups=t.index_dups,
+            batch_dups=within_batch_dups(
+                [(a, b, round6(j)) for a, b, j in t.edges], t.index_dups
+            ),
+            insert=lambda admitted: _insert_text(
+                spark, index_path, t, admitted
+            ),
+        )
 
-    # LOCALIZE the probe's decision-sized outputs (r14, same contract
-    # as the other gates — the decision rows were ALWAYS collected
-    # before the appends because their plan reads the index's
-    # bands/sigs parquet and recacheByPath would re-probe the grown
-    # index at the commit, VERDICT r12 item 4): index rejects, the
-    # within-batch candidate+Jaccard graph, components, the decision
-    # rows, and the insert frames all assemble in plain Python over
-    # micro-batch-sized rows instead of ~10 per-batch shuffle
-    # micro-stages. The corpus-side machinery (band-pruned index scan,
-    # sb-pruned exact-Jaccard verify) stays fully distributed.
-    dup_rows = [tuple(r) for r in index_dups.collect()]
-    self_set = {r[0] for r in self_ids.collect()}
-    sig_rows = [(r[0], r[1]) for r in sig.select("doc_id", "hs").collect()]
-    bk_rows = [
-        tuple(r) for r in bk.select("doc_id", "band", "bucket").collect()
-    ]
-    occ_rows = occ.collect()
-    idx_rej = {d: (dup, j) for d, dup, j in dup_rows}
-
-    # within-batch: one representative per near-dup component (see
-    # admission_common); edges restricted to probe survivors on both
-    # sides — an index duplicate keeps its index provenance and must
-    # not stitch two otherwise-unrelated survivors together
-    hot_bb = {(r["band"], r["bucket"]) for r in occ_rows
-              if r["_n"] > max_bucket}
-    surv = [
-        (a, b, round6(j))
-        for a, b, j in local_text_within(sig_rows, bk_rows, hot_bb,
-                                         threshold)
-        if a not in idx_rej and b not in idx_rej
-    ]
-    batch_dups = {
-        node: (canon, j)
-        for node, canon, j in resolve_local_components(surv, 1)
-    }
-
-    # ORDERING INVARIANT (crash-window convergence): the three writes
-    # run as sigs -> bands -> decisions commit. Self-detection keys on
-    # BAND rows (the probe path), so bands must never exist without
-    # their signatures: sigs first means a crash between the two
-    # appends leaves sig rows whose bands are missing — the replay's
-    # self-detection finds nothing and re-inserts BOTH (a duplicate
-    # sig row is benign: candidate pairs are grouped/maxed downstream,
-    # and the exact-Jaccard value is identical), never band keys whose
-    # signatures are permanently suppressed. The decisions commit runs
-    # LAST: a committed epoch skips on replay, so everything it
-    # implies must already be durable.
-    dec_rows = []
-    for d, _hs in sig_rows:
-        if d in idx_rej:
-            dup, j = idx_rej[d]
-            dec_rows.append((d, False, dup, j, int(epoch_id)))
-        elif d in batch_dups:
-            canon, j = batch_dups[d]
-            dec_rows.append((d, False, canon, j, int(epoch_id)))
-        else:
-            dec_rows.append((d, True, None, None, int(epoch_id)))
-    dec_schema = StructType([
-        StructField("doc_id", LongType(), True),
-        StructField("admitted", BooleanType(), False),
-        StructField("dup_of", LongType(), True),
-        StructField("jaccard", DoubleType(), True),
-        StructField("epoch", IntegerType(), False),
-    ])
-
-    # EVERY append below writes a ONE-SLICE driver-local frame — never
-    # a plan reading an index path, and no per-insert joins: the
-    # admitted ids, signatures, band keys, and the live bucket sizes
-    # (prior touched-bucket occupancy + this batch's insert delta) are
-    # all already on the driver.
-    hs_by = dict(sig_rows)
-    ins_ids = sorted(
-        d for d, admitted, _dup, _j, _e in dec_rows
-        if admitted and d not in self_set
-    )
-    sig_store_append(
-        _one_slice(
-            spark, [(d, hs_by[d]) for d in ins_ids],
-            "doc_id long, hs array<long>",
-        ),
-        index_path,
-    )
-    occ_by = {(r["band"], r["bucket"]): r["_n"] for r in occ_rows}
-    ins_set = set(ins_ids)
-    new_bk = [(d, band, bucket) for d, band, bucket in bk_rows
-              if d in ins_set]
-    delta: dict = {}
-    for _d, band, bucket in new_bk:
-        delta[(band, bucket)] = delta.get((band, bucket), 0) + 1
-    sized_rows = [
-        (d, bucket, occ_by.get((band, bucket), 0) + delta[(band, bucket)],
-         band)
-        for d, band, bucket in new_bk
-    ]
-    _one_slice(
-        spark, sized_rows,
-        "doc_id long, bucket long, bucket_size long, band int",
-    ).write.partitionBy("band").mode("append").parquet(
-        f"{index_path}/bands"
-    )
-
-    # one-slice localized frame: the decision rows are already on the
-    # driver, and a default createDataFrame would scatter them over
-    # defaultParallelism partitions whose single-file rewrite costs
-    # ~10x the write itself (see merge.append's n_files note)
-    decided = spark.createDataFrame(
-        spark.sparkContext.parallelize(dec_rows, 1), dec_schema
-    )
-    # O(batch) ledger commit: the new version holds ONLY this batch's
-    # decision file; the version's full file set is its manifest
-    # (merge.append — r13 manifest layout: O(1) directory entries and
-    # O(batch) bytes on any filesystem). retain=2 bounds retained
-    # versions; maintenance_tick compacts the file count.
-    table.append(
-        decided, epoch=epoch_id, app_id=app_id, retain=2, n_files=None
-    )
-    sig.unpersist()
-    bk.unpersist()
-    occ.unpersist()
-    for fr in scratch:
-        fr.unpersist()
-    return True
+    return run_gate(spark, state_dir, epoch_id, app_id, DECISIONS, probe)
 
 
 def admit_text_stream(
@@ -425,44 +370,19 @@ def admit_text_stream(
     available_now: bool = True,
     maintenance_every: int | None = 50,
 ) -> StreamingQuery:
-    """Wire the admission gate into a streaming query (checkpoint =
-    epoch-guard identity, exactly-once across restarts).
-    ``maintenance_every`` (default 50 — ON by default, VERDICT r13
-    item 2: a stream that never compacts grows per-leaf file counts
-    and manifest bytes without bound; pass ``None``/0 to explicitly
-    opt out): every N-th PROCESSED epoch, compact the index (sigs deduped, bands merged)
-    and the decision ledger between micro-batches
-    (maintenance.maintenance_tick — decisions are byte-identical
-    across a compaction). Replayed epochs skip the tick (the batch
-    fold reports replay, so a restart never pays O(index) compaction
-    for an epoch it did not process)."""
-    spark = stream.sparkSession
-
-    def fold(batch_df: DataFrame, epoch_id: int) -> None:
-        processed = admit_text_batch(
-            spark,
-            batch_df,
-            index_path,
-            state_dir,
-            epoch_id,
-            app_id=checkpoint,
-            text_col=text_col,
-            threshold=threshold,
-            max_bucket=max_bucket,
-        )
-        if processed:
-            maintenance_tick(
-                spark, epoch_id, maintenance_every, [index_path], state_dir
-            )
-
-    writer = stream.writeStream.foreachBatch(fold).option(
-        "checkpointLocation", checkpoint
+    """Wire the text gate into a streaming query; checkpoint identity
+    and the maintenance tick (index sigs deduped, bands merged, and
+    the ledger): see :func:`admission_common.start_gate_stream`."""
+    admit = partial(
+        admit_text_batch, index_path=index_path, state_dir=state_dir,
+        text_col=text_col, threshold=threshold, max_bucket=max_bucket,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_gate_stream(
+        stream, admit, checkpoint, state_dir, [index_path],
+        maintenance_every, available_now,
+    )
 
 
 def read_decisions(spark: SparkSession, state_dir: str) -> DataFrame:
     """All admission decisions so far (one row per doc seen)."""
-    return ParquetMergeTable(spark, state_dir).read().select(*DECISION_COLS)
+    return read_ledger(spark, state_dir, DECISIONS)

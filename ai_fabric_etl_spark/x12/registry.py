@@ -23,8 +23,6 @@ their own JSON registry file.
 
 from __future__ import annotations
 
-import json
-
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -45,11 +43,6 @@ _TYPE_MAP = {
     "date": DateType(),
     "time": StringType(),  # X12 HHMM times carry no date; kept lexical
 }
-
-
-def load_registry(path: str) -> dict:
-    with open(path, encoding="utf-8") as fh:
-        return json.load(fh)
 
 
 def _field_name(element: dict) -> str:

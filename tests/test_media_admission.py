@@ -171,48 +171,6 @@ def test_admission_stream_equals_batch(spark, tmp_path):
     assert pb == ps == {(100, 10), (101, 2)}
 
 
-def test_admission_index_insert_precedes_epoch_commit(
-    spark, tmp_path, monkeypatch
-):
-    """The ordering itself (ADVICE r10): if the epoch commit fails,
-    the index MUST already hold the admitted hashes — commit-first
-    would skip the replay and lose them from the index forever."""
-    from ai_fabric_etl_spark.operators.merge import ParquetMergeTable
-
-    idx = str(tmp_path / "idx")
-    state = str(tmp_path / "state")
-    _init_index(spark, idx)
-    b = _media(spark, [(1, _img(1)), (2, _img(2))])
-
-    def boom(self, *a, **kw):
-        raise RuntimeError("simulated crash at the epoch commit")
-
-    monkeypatch.setattr(ParquetMergeTable, "overwrite", boom)
-    try:
-        admit_media_batch(spark, b, idx, state, epoch_id=0, app_id="t")
-    except RuntimeError:
-        pass
-    monkeypatch.undo()
-
-    # insert already durable, decisions not committed
-    got = {(r.batch_id, r.index_id)
-           for r in multimodal.phash_index_probe(
-               spark, idx, multimodal.dhash64(b, fake=False)
-           ).collect()}
-    assert got == {(1, 1), (2, 2)}
-    assert not ParquetMergeTable(spark, state).exists()
-
-    # replay converges: decisions land, no duplicate index rows
-    admit_media_batch(spark, b, idx, state, epoch_id=0, app_id="t")
-    d = {r.media_id: (r.admitted, r.dup_of)
-         for r in read_decisions(spark, state).collect()}
-    assert d == {1: (True, None), 2: (True, None)}
-    n = spark.read.schema(
-        "media_id long, dhash long, cv long, ci int, cb int"
-    ).parquet(idx).count()
-    assert n == 8  # 2 images x 4 chunk rows, inserted exactly once
-
-
 def test_admission_replay_matches_clean_run(spark, tmp_path):
     """Interleaving invariance: replay after a crashed attempt that
     already inserted the admitted rows computes EXACTLY the clean

@@ -253,6 +253,28 @@ def test_triangle_counts_orientation_handles_hub(spark):
     assert got == {0: 1, 1: 1, 2: 1}
 
 
+def test_broadcast_threshold_bytes_parses_every_size_form(spark):
+    """The triangle broadcast gate reads the threshold as Spark parses
+    it: unit suffixes with and without 'b', the -1 off switch, and a
+    bare byte count."""
+    from ai_fabric_etl_spark.operators.graph import _broadcast_threshold_bytes
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prior = spark.conf.get(key)
+    try:
+        for raw, want in [
+            ("10mb", 10 * 1024**2),
+            ("512kb", 512 * 1024),
+            ("1g", 1024**3),
+            ("-1", -1),
+            ("123456", 123456),
+        ]:
+            spark.conf.set(key, raw)
+            assert _broadcast_threshold_bytes(spark) == want, raw
+    finally:
+        spark.conf.set(key, prior)
+
+
 def test_pq_recall_and_compression(spark, sf_dir):
     """The production PQ pipeline (OPQ balanced permutation +
     m=8/k=64 codebooks + ADC shortlist 200 + exact rerank): pooled

@@ -151,38 +151,6 @@ def test_paired_replay_and_crash_windows(spark, tmp_path):
     assert spark.read.parquet(f"{tidx}/sigs").count() == n_sig
 
 
-def test_paired_commit_runs_last(spark, tmp_path, monkeypatch):
-    """If the epoch commit fails, BOTH indexes already hold the
-    admitted pair; the replay converges without duplicates."""
-    from ai_fabric_etl_spark.operators.merge import ParquetMergeTable
-
-    tidx, iidx = str(tmp_path / "t"), str(tmp_path / "i")
-    state = str(tmp_path / "s")
-    _init(spark, tidx, iidx, [(1, "T1", "I1")])
-    b = _pairs(spark, [(100, _text("N-a"), _img("N-b"))])
-
-    def boom(self, *a, **kw):
-        raise RuntimeError("simulated crash at the epoch commit")
-
-    monkeypatch.setattr(ParquetMergeTable, "overwrite", boom)
-    try:
-        admit_pairs_batch(spark, b, tidx, iidx, state,
-                          epoch_id=0, app_id="t")
-    except RuntimeError:
-        pass
-    monkeypatch.undo()
-    assert spark.read.parquet(f"{tidx}/sigs").filter(
-        "doc_id = 100").count() == 1
-    assert not ParquetMergeTable(spark, state).exists()
-
-    admit_pairs_batch(spark, b, tidx, iidx, state, epoch_id=0, app_id="t")
-    d = {r.pair_id: r.admitted
-         for r in read_decisions(spark, state).collect()}
-    assert d == {100: True}
-    assert spark.read.parquet(f"{tidx}/sigs").filter(
-        "doc_id = 100").count() == 1
-
-
 def test_paired_stream_equals_batch(spark, tmp_path):
     """File-stream (availableNow, one batch per file) == direct batch
     calls."""

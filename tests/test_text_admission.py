@@ -170,45 +170,6 @@ def test_text_admission_stream_equals_batch(spark, tmp_path):
     assert (210, True, None, None) in got
 
 
-def test_text_admission_inserts_precede_epoch_commit(
-    spark, tmp_path, monkeypatch
-):
-    """The ordering itself (ADVICE r10): if the epoch commit fails,
-    the index MUST already hold the admitted doc's sigs AND bands —
-    commit-first would skip the replay and lose the doc from the
-    index forever."""
-    from ai_fabric_etl_spark.operators.merge import ParquetMergeTable
-
-    idx = str(tmp_path / "idx")
-    state = str(tmp_path / "state")
-    _build_index(spark, idx, [(1, BASE)])
-    b = _docs(spark, [(100, NOVEL_A)])
-    n_sig0 = spark.read.parquet(f"{idx}/sigs").count()
-
-    def boom(self, *a, **kw):
-        raise RuntimeError("simulated crash at the epoch commit")
-
-    monkeypatch.setattr(ParquetMergeTable, "overwrite", boom)
-    try:
-        admit_text_batch(spark, b, idx, state, epoch_id=0, app_id="t")
-    except RuntimeError:
-        pass
-    monkeypatch.undo()
-
-    sigs = spark.read.parquet(f"{idx}/sigs")
-    bands = spark.read.parquet(f"{idx}/bands")
-    assert sigs.filter("doc_id = 100").count() > 0
-    assert bands.filter("doc_id = 100").count() > 0
-    assert not ParquetMergeTable(spark, state).exists()
-
-    # replay converges: decisions land, no duplicate index rows
-    admit_text_batch(spark, b, idx, state, epoch_id=0, app_id="t")
-    d = {r.doc_id: (r.admitted, r.dup_of)
-         for r in read_decisions(spark, state).collect()}
-    assert d == {100: (True, None)}
-    assert spark.read.parquet(f"{idx}/sigs").count() == n_sig0 + 1
-
-
 def test_text_admission_orphan_sigs_never_suppress(spark, tmp_path):
     """A crash BETWEEN the sigs append and the bands append (the
     window the sigs-first ordering makes survivable) converges on
